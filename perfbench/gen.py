@@ -285,6 +285,19 @@ def read_stream(seed: int, tables: dict, n: int = 4000, repeat_share: float = 0.
     return out
 
 
+def warmup_len(stream: list[tuple[int, dict]]) -> int:
+    """Length of the shortest prefix of ``stream`` that holds every
+    template. The warm-up reads that prefix and the timed reads start
+    after it, so a timed read repeats a warm-up read only where the
+    stream itself planted a repeat."""
+    seen = set()
+    for i, (t, _p) in enumerate(stream):
+        seen.add(t)
+        if len(seen) == len(READ_TEMPLATES):
+            return i + 1
+    return len(stream)
+
+
 # -- curation_stream ----------------------------------------------------
 
 

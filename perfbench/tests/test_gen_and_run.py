@@ -4,6 +4,8 @@ seeds; the run helpers follow their stated rules.
     python3 -m pytest perfbench/tests -q
 """
 
+import argparse
+import json
 import os
 import shutil
 import subprocess
@@ -71,6 +73,27 @@ def test_read_stream_balanced_with_repeats():
     assert 1 - len(set(keys)) / len(keys) > 0.25  # planted repeats plus natural collisions
 
 
+def test_timed_reads_do_not_replay_the_warmup():
+    """The timed reads after the warm-up repeat a warm-up read only as
+    often as the stream plants repeats (``repeat_share``, 0.3), not
+    every time."""
+    t = gen.star_tables(1, customers=300, orders=3000, suppliers=20)
+
+    def key(x):
+        return x[0], tuple(sorted(x[1].items()))
+
+    timed = repeats = 0
+    for seed in range(1, 41):
+        s = gen.read_stream(seed, t, n=200)
+        w = gen.warmup_len(s)
+        assert sorted(x for x, _ in s[:w]) == list(range(len(gen.READ_TEMPLATES)))
+        warm = {key(x) for x in s[:w]}
+        first_round = s[w : w + len(gen.READ_TEMPLATES)]
+        timed += len(first_round)
+        repeats += sum(key(x) in warm for x in first_round)
+    assert repeats / timed <= 0.3 + 0.05  # planted repeats plus rare natural collisions
+
+
 def test_tail_rule():
     assert run.tail([5.0, 1.0, 3.0]) == {"value": 5.0, "percentile": 100.0, "n": 3, "beyond": 0}
     t = run.tail([float(i) for i in range(100)])
@@ -80,6 +103,27 @@ def test_tail_rule():
 def test_steady_ms_drops_stolen_samples_unless_most_are():
     assert run.steady_ms([(1.0, 0.0), (3.0, 0.2), (1.2, 0.01)]) == [1000.0, 1200.0]
     assert run.steady_ms([(1.0, 0.0), (3.0, 0.2), (2.0, 0.5)]) == [1000.0, 3000.0, 2000.0]
+
+
+def test_cached_untraced_record_is_tied_to_the_code(tmp_path, monkeypatch):
+    for top in run.CODE_DIRS:
+        (tmp_path / top).mkdir()
+        (tmp_path / top / "a.py").write_text("x = 1\n")
+    monkeypatch.setattr(run, "ROOT", str(tmp_path))
+    code = run.code_id()
+    (tmp_path / "perfbench" / "a.py").write_text("x = 2\n")
+    assert run.code_id() != code
+
+    args = argparse.Namespace(workload="uda_sync", seed=1, seconds=6)
+    path = run._cache_path(args, code)
+    assert code in os.path.basename(path)
+    os.makedirs(os.path.dirname(path))
+    with open(path, "w") as f:
+        json.dump({"code_id": "other", "end_to_end": {}}, f)
+    assert run.untraced_reference(args, code) is None
+    with open(path, "w") as f:
+        json.dump({"code_id": code, "end_to_end": {}}, f)
+    assert run.untraced_reference(args, code)["code_id"] == code
 
 
 def test_metric_lists_are_well_formed():

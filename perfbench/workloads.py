@@ -82,13 +82,12 @@ LABELS = {"people": "Person", "orgs": "Organisation"}
 LOOKUPS_PER_FLUSH = 3
 
 
-def _current_dir(root: str) -> str | None:
-    """The committed snapshot directory a storage root's CURRENT names."""
-    try:
-        with open(os.path.join(root, "CURRENT")) as f:
-            return os.path.join(root, f"v{int(f.read()):08d}")
-    except OSError:
-        return None
+def _current_dir(root: str) -> str:
+    """The directory of a storage root's committed snapshot."""
+    from opencypher_datalayer_spark.storage import open_storage
+
+    storage = open_storage(root)
+    return storage._version_dir(storage.current_version())
 
 
 def _tree(root: str) -> dict:
@@ -280,13 +279,11 @@ class CypherRead(Workload):
         return df, rows
 
     def warmup(self) -> None:
-        seen = set()
-        for t, p in self.stream:
-            if t not in seen:
-                seen.add(t)
-                self._read(t, p)
-            if len(seen) == len(gen.READ_TEMPLATES):
-                break
+        """Every template once: the stream's leading round. The timed
+        reads continue the stream after it."""
+        self.i = gen.warmup_len(self.stream)
+        for t, p in self.stream[: self.i]:
+            self._read(t, p)
 
     def step(self) -> int:
         t, params = self.stream[self.i % len(self.stream)]

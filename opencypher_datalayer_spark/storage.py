@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from opencypher_datalayer_spark.model import EDGES_SCHEMA, NODES_SCHEMA
-from opencypher_datalayer_spark.store import GraphStore
+from opencypher_datalayer_spark.store import GraphStore, PreparedBatch, prepare_batch
 
 _CURRENT = "CURRENT"
 _MANIFEST = "MANIFEST.json"
@@ -264,11 +264,14 @@ class ParquetGraphStorage:
             os.path.join(vdir, "edges")
         )
         self._write_manifest(vdir)
+        self._set_current(v)
+        return v
+
+    def _set_current(self, v: int) -> None:
         fd, tmp = tempfile.mkstemp(dir=self.root)
         with os.fdopen(fd, "w") as f:
             f.write(str(v))
         os.replace(tmp, os.path.join(self.root, _CURRENT))  # atomic pointer swap
-        return v
 
     # -- file-skipping manifest (the gid-index analog, C6) -------------
 
@@ -357,10 +360,6 @@ class ParquetGraphStorage:
 
     # -- pruned MERGE commit (the write-side payoff of C6) --------------
 
-    # Above this many batch rows, collecting keys driver-side stops being
-    # metadata-scale; bulk loads take the full-commit path instead.
-    MERGE_MAX_BATCH_ROWS = 100_000
-
     def merge_commit(
         self, spark: SparkSession, batch: DataFrame, label: str, source: str
     ) -> int:
@@ -372,7 +371,12 @@ class ParquetGraphStorage:
         reference's per-batch transaction touches the few Neo4j pages its
         gid index points at (``neo4j.go:21``); a commit that rewrites the
         whole table would be the equivalent of a full reindex per batch.
-        Here the batch's key set selects the files to rewrite:
+
+        The batch is evaluated once, before the commit lock, by
+        ``store.prepare_batch``: one Spark action yields its node and
+        edge items, one key frame of its dead, live and target gids, and
+        the same keys as driver lists. The lists select the files to
+        rewrite:
 
         - nodes: any file whose gid range admits a batch id (upsert or
           tombstone) or a reference target (stub check) — pruning
@@ -384,59 +388,69 @@ class ParquetGraphStorage:
           tombstoned id (detach removes edges in either direction).
 
         The selected subset is loaded as a miniature GraphStore and the
-        ordinary ``apply_batch`` runs on it — bit-identical semantics to
-        the full path, just restricted to the files that can change.
-        Repeated merges append small un-clustered files; a periodic
-        ``commit(store, cluster_buckets=N)`` is the compaction that
-        re-tightens the ranges (OPTIMIZE's role in a table format).
+        ordinary ``apply_prepared`` runs on it — bit-identical semantics
+        to the full path, just restricted to the files that can change.
+        Its store side reads only the materialized batch frames and the
+        one key frame. Repeated merges append small un-clustered files; a
+        periodic ``commit(store, cluster_buckets=N)`` is the compaction
+        that re-tightens the ranges (OPTIMIZE's role in a table format).
 
         Falls back to a full commit when there is no manifest yet or the
-        batch is too large to key-collect driver-side.
+        batch is above ``store.MERGE_MAX_BATCH_ROWS`` (its keys were not
+        collected to the driver).
         """
+        prepared = prepare_batch(batch)
         self._acquire_commit_lock()
         try:
-            return self._merge_commit_locked(spark, batch, label, source)
+            v = self.current_version()
+            full = self._merge_into(spark, prepared, label, source, v, self._version_dir(v + 1))
+            if full is not None:
+                return self._commit_locked(full)
+            self._set_current(v + 1)
+            return v + 1
         finally:
             self._release_commit_lock()
 
-    def _merge_commit_locked(
-        self, spark: SparkSession, batch: DataFrame, label: str, source: str
-    ) -> int:
-        v = self.current_version()
-        manifest = self._manifest(v)
-        if v == 0 or manifest is None:
-            return self._commit_locked(self.load(spark).apply_batch(batch, label, source))
-        keys = batch.select(
-            "id", "deleted", F.flatten(F.map_values("refs")).alias("targets")
-        ).limit(self.MERGE_MAX_BATCH_ROWS + 1).collect()
-        if len(keys) > self.MERGE_MAX_BATCH_ROWS:
-            return self._commit_locked(self.load(spark).apply_batch(batch, label, source))
-        dead = sorted({r["id"] for r in keys if r["deleted"]})
-        live = sorted({r["id"] for r in keys if not r["deleted"]})
-        targets = sorted(
-            {t for r in keys if not r["deleted"] for t in (r["targets"] or [])}
-        )
-        node_keys = sorted(set(live) | set(dead) | set(targets))
-        vdir = self._version_dir(v)
-
-        node_hit = {e["path"] for e in _prune(manifest["nodes"], node_keys)}
-        edge_hit = {
-            e["path"]
-            for e in _prune_edge_files(manifest["edges"], live + dead, dead)
+    def _merge_into(
+        self,
+        spark: SparkSession,
+        prepared: PreparedBatch,
+        label: str,
+        source: str,
+        v: int,
+        new_vdir: str,
+    ) -> GraphStore | None:
+        """The pruned-MERGE body both backends share: write version
+        ``v`` plus the prepared batch into ``new_vdir`` (hit files
+        rewritten, the rest hard-linked, manifest carried) and return
+        ``None``. When the pruned path does not apply, write nothing and
+        return the merged full store for the caller to commit."""
+        manifest = self._manifest(v)  # None for v == 0 too
+        if manifest is None or not prepared.local:
+            return self.load_version(spark, v).apply_prepared(prepared, label, source)
+        node_keys = sorted(set(prepared.live) | set(prepared.dead) | set(prepared.targets))
+        hit = {
+            "nodes": {e["path"] for e in _prune(manifest["nodes"], node_keys)},
+            "edges": {
+                e["path"]
+                for e in _prune_edge_files(
+                    manifest["edges"], prepared.live + prepared.dead, prepared.dead
+                )
+            },
         }
-
+        vdir = self._version_dir(v)
         sub = GraphStore(
-            self._read_files(spark, vdir, "nodes", sorted(node_hit)),
-            self._read_files(spark, vdir, "edges", sorted(edge_hit)),
+            self._read_files(spark, vdir, "nodes", sorted(hit["nodes"])),
+            self._read_files(spark, vdir, "edges", sorted(hit["edges"])),
         )
-        merged = sub.apply_batch(batch, label, source)
+        merged = sub.apply_prepared(prepared, label, source)
 
-        new_v = v + 1
-        new_vdir = self._version_dir(new_v)
-        for table, hit in (("nodes", node_hit), ("edges", edge_hit)):
+        carry = {}
+        for table in ("nodes", "edges"):
             for e in manifest[table]:
-                if e["path"] in hit:
+                if e["path"] in hit[table]:
                     continue
+                carry[e["path"]] = e
                 src_path = os.path.join(vdir, e["path"])
                 dst_path = os.path.join(new_vdir, e["path"])
                 os.makedirs(os.path.dirname(dst_path), exist_ok=True)
@@ -450,18 +464,8 @@ class ParquetGraphStorage:
         merged.edges.write.mode("append").partitionBy("rel_type").parquet(
             os.path.join(new_vdir, "edges")
         )
-        carry = {
-            e["path"]: e
-            for table, hit in (("nodes", node_hit), ("edges", edge_hit))
-            for e in manifest[table]
-            if e["path"] not in hit
-        }
         self._write_manifest(new_vdir, carry=carry)
-        fd, tmp = tempfile.mkstemp(dir=self.root)
-        with os.fdopen(fd, "w") as f:
-            f.write(str(new_v))
-        os.replace(tmp, os.path.join(self.root, _CURRENT))
-        return new_v
+        return None
 
     def compact(self, spark: SparkSession, cluster_buckets: int = 8) -> int:
         """Rewrite the current version range-clustered — the OPTIMIZE
@@ -664,85 +668,25 @@ class TxnLogGraphStorage(ParquetGraphStorage):
         # optimistic concurrency: build the delta against the current
         # snapshot, publish; a lost race discards the built directory
         # and rebuilds against the winner's version, so concurrent
-        # batches compose instead of overwriting each other
+        # batches compose instead of overwriting each other. The batch
+        # is evaluated once and reused by every rebuild.
+        prepared = prepare_batch(batch)
         while True:
             base_v = self.current_version()
-            manifest = self._manifest(base_v)
-            if base_v == 0 or manifest is None:
-                merged = self.load(spark).apply_batch(batch, label, source)
-                build = lambda m=merged: self._write_snapshot(m)
-            else:
-                build = lambda b=base_v, m=manifest: self._build_merge_dir(
-                    spark, batch, label, source, b, m
+
+            def build(b=base_v) -> str:
+                dirname = f"d-{uuid.uuid4().hex}"
+                full = self._merge_into(
+                    spark, prepared, label, source, b, os.path.join(self.root, dirname)
                 )
+                return dirname if full is None else self._write_snapshot(full)
+
             dirname = build()
             if not self._touch_publish_dir(dirname):
                 dirname = build()  # collected by GC during a long stall
             if self._publish(base_v + 1, dirname):
                 return self._finalize_publish(base_v + 1, dirname, build)
             shutil.rmtree(os.path.join(self.root, dirname), ignore_errors=True)
-
-    def _build_merge_dir(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        label: str,
-        source: str,
-        v: int,
-        manifest: dict,
-    ) -> str:
-        """The pruned-MERGE body of the base class, writing into a
-        uniquely-named directory instead of ``v{N+1}`` (same file
-        selection, same carry-forward links, same apply_batch)."""
-        keys = batch.select(
-            "id", "deleted", F.flatten(F.map_values("refs")).alias("targets")
-        ).limit(self.MERGE_MAX_BATCH_ROWS + 1).collect()
-        if len(keys) > self.MERGE_MAX_BATCH_ROWS:
-            return self._write_snapshot(self.load(spark).apply_batch(batch, label, source))
-        dead = sorted({r["id"] for r in keys if r["deleted"]})
-        live = sorted({r["id"] for r in keys if not r["deleted"]})
-        targets = sorted(
-            {t for r in keys if not r["deleted"] for t in (r["targets"] or [])}
-        )
-        node_keys = sorted(set(live) | set(dead) | set(targets))
-        vdir = self._version_dir(v)
-        node_hit = {e["path"] for e in _prune(manifest["nodes"], node_keys)}
-        edge_hit = {
-            e["path"]
-            for e in _prune_edge_files(manifest["edges"], live + dead, dead)
-        }
-        sub = GraphStore(
-            self._read_files(spark, vdir, "nodes", sorted(node_hit)),
-            self._read_files(spark, vdir, "edges", sorted(edge_hit)),
-        )
-        merged = sub.apply_batch(batch, label, source)
-        dirname = f"d-{uuid.uuid4().hex}"
-        new_vdir = os.path.join(self.root, dirname)
-        for table, hit in (("nodes", node_hit), ("edges", edge_hit)):
-            for e in manifest[table]:
-                if e["path"] in hit:
-                    continue
-                src_path = os.path.join(vdir, e["path"])
-                dst_path = os.path.join(new_vdir, e["path"])
-                os.makedirs(os.path.dirname(dst_path), exist_ok=True)
-                try:
-                    os.link(src_path, dst_path)  # zero-copy carry-forward
-                except OSError:
-                    shutil.copy2(src_path, dst_path)
-        merged.nodes.write.mode("append").partitionBy("label").parquet(
-            os.path.join(new_vdir, "nodes")
-        )
-        merged.edges.write.mode("append").partitionBy("rel_type").parquet(
-            os.path.join(new_vdir, "edges")
-        )
-        carry = {
-            e["path"]: e
-            for table, hit in (("nodes", node_hit), ("edges", edge_hit))
-            for e in manifest[table]
-            if e["path"] not in hit
-        }
-        self._write_manifest(new_vdir, carry=carry)
-        return dirname
 
     def vacuum(self, keep: int = 2) -> None:
         """Drop data directories (and their log entries) older than the

@@ -11,20 +11,31 @@ itself, and file/partition pruning plays the index's role).
 
 Here each template is a set-oriented DataFrame transform; one
 ``apply_batch`` call is the atomic unit the reference's per-batch
-transaction was.
+transaction was. It runs in two steps: ``prepare_batch`` evaluates the
+batch side once, and ``GraphStore.apply_prepared`` merges it into the
+store (``storage.merge_commit`` runs the two steps separately, so that
+the batch's keys can also choose the files to rewrite).
 
 Scale notes (100 TB, 1000 executors):
 
-- Every merge is batch-vs-store: the batch side is small (a sync
-  micro-batch), so it is explicitly ``F.broadcast`` — node upsert, edge
-  clear, and tombstone deletes are broadcast anti-joins, never a full
-  shuffle of the store.
+- The batch side is evaluated once per batch, in one Spark action: the
+  in-batch dedup, property-key flattening and reference fan-out yield
+  the live node items, the deduped edge items and ONE key frame of the
+  batch's dead, live and target gids. Up to ``MERGE_MAX_BATCH_ROWS``
+  deduped rows these are rebuilt as one-slice driver-local frames;
+  above it the same frames are derived from a ``localCheckpoint`` of
+  the deduped batch. Either way no store-side join re-runs the dedup.
+- Every merge is batch-vs-store, and the batch side is small (a sync
+  micro-batch), so it is explicitly ``F.broadcast``: node upsert, edge
+  clear, and tombstone deletes are broadcast anti-joins against the key
+  frame, never a full shuffle of the store.
 - The store side is only ever filtered/anti-joined and unioned — no
   store-wide shuffle or sort in the write path at all.
-- Stub detection (C3) is the one batch-vs-store join keyed on the store's
-  gid; it is a broadcast semi-join of store vs (tiny) target set, i.e.
-  cost ~ one scan of nodes, which file-level pruning on gid ranges cuts
-  further under a real table format.
+- The C2 prior-labels lookup and the C3 stub-existence check are one
+  broadcast semi-join of the store's nodes against the key frame (cost
+  ~ one scan of nodes, which file-level pruning on gid ranges cuts
+  further), materialized once like the batch. The label union and the
+  stub projection are then joins of batch-sized frames.
 """
 
 from __future__ import annotations
@@ -34,6 +45,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from opencypher_datalayer_spark.functions.localframe import local_df
 from opencypher_datalayer_spark.functions.uri import strip_prop_keys, uri_localname
 from opencypher_datalayer_spark.model import EDGES_SCHEMA, NODES_SCHEMA
 
@@ -106,96 +118,96 @@ class GraphStore:
     # ------------------------------------------------------------------
 
     def apply_batch(self, batch: DataFrame, label: str, source: str) -> "GraphStore":
-        """Apply one sync batch (entity envelope rows, ``model.ENTITY_SCHEMA``).
+        """Apply one sync batch (entity envelope rows, ``model.ENTITY_SCHEMA``):
+        :func:`prepare_batch` evaluates it once, :meth:`apply_prepared`
+        merges it into the store."""
+        return self.apply_prepared(prepare_batch(batch), label, source)
+
+    def apply_prepared(self, prepared: "PreparedBatch", label: str, source: str) -> "GraphStore":
+        """Merge a prepared batch into this store.
 
         Order is semantically load-bearing and mirrors the reference's
         single transaction: deletes -> node upserts -> target stubs ->
-        edges (``neo4j.go:243-279``).
+        edges (``neo4j.go:243-279``). The batch side is materialized, so
+        every join below reads it without re-deriving it.
         """
-        batch = _dedup_keep_last(batch)
+        keys = prepared.keys
+        # C1 + C2 remove the same store rows: every dead or live gid
+        # (the dedup makes the two sets disjoint)
+        batch_gids = keys.where(F.col("dead") | F.col("live")).select("gid")
 
-        # W3 tombstone split (neo4j.go:186-189)
-        deleted_gids = batch.where(F.col("deleted")).select(F.col("id").alias("gid"))
-        live = batch.where(~F.col("deleted"))
-
-        # W4 node-item projection (neo4j.go:192-197): gid + source + stripped props
-        node_items = live.select(
-            F.col("id").alias("gid"),
-            F.lit(label).alias("label"),
-            F.lit(source).alias("source"),
-            strip_prop_keys("props").alias("props"),
+        # One lookup of the store's nodes against the key frame serves
+        # both store-dependent decisions: a live gid's prior label set
+        # (C2) and whether a target already exists (C3). The store is
+        # semi-joined against the broadcast keys, never the other way
+        # round: anti-joining the keys against the store would plan as a
+        # store-wide SortMergeJoin (the small side cannot be the build
+        # side of an anti join). The result is batch-sized, so it is
+        # materialized once like the batch.
+        found = _materialize(
+            self.nodes.join(F.broadcast(keys.select("gid")), "gid", "left_semi").select(
+                "gid", labels_expr(self.nodes).alias("_prior_labels")
+            ),
+            prepared.local,
         )
 
-        # W5/W6 edge fan-out (neo4j.go:199-228): one row per (entity, ref, target),
-        # rel type = flattened ref URI; MERGE dedup on (src, rel_type, dst).
-        edge_items = (
-            live.select(F.col("id").alias("src"), F.explode("refs").alias("ref", "targets"))
-            .select(
-                "src",
-                uri_localname("ref").alias("rel_type"),
-                F.explode("targets").alias("dst"),
-                F.lit(source).alias("source"),
-            )
-            .dropDuplicates(["src", "rel_type", "dst"])
-        )
-
-        # --- C1: DETACH DELETE for tombstones (neo4j.go:95-99) ---
-        nodes = _anti_by_gid(self.nodes, deleted_gids)
-        edges = _detach_edges(self.edges, deleted_gids)
-
+        # --- C1: DETACH DELETE for tombstones (neo4j.go:95-99) and
         # --- C2: node merge + outgoing-edge clear + property replace
         # (neo4j.go:101-109). Replace-not-patch means the new row simply
         # supersedes the old one: broadcast anti-join + union. Labels are
         # the one accumulating field (``SET n:%s`` ADDS, neo4j.go:107):
         # the superseding row unions the prior label set with the batch
-        # label. ``prior`` is batch-sized (store semi-joined against the
-        # broadcast batch gids), so the lookup stays a broadcast join.
-        live_gids = live.select(F.col("id").alias("gid"))
-        prior = nodes.join(F.broadcast(live_gids), "gid", "left_semi").select(
-            "gid", labels_expr(nodes).alias("_prior_labels")
-        )
-        node_items = node_items.join(F.broadcast(prior), "gid", "left").select(
+        # label.
+        node_items = prepared.nodes.join(F.broadcast(found), "gid", "left").select(
             "gid",
-            "label",
+            F.lit(label).alias("label"),
             F.array_sort(
                 F.array_union(
                     F.coalesce("_prior_labels", F.array().cast("array<string>")),
                     F.array(F.lit(label)),
                 )
             ).alias("labels"),
-            "source",
+            F.lit(source).alias("source"),
             "props",
         )
-        nodes = _anti_by_gid(nodes, live_gids).unionByName(node_items, allowMissingColumns=True)
-        edges = edges.join(
-            F.broadcast(live_gids.withColumnRenamed("gid", "src")), "src", "left_anti"
+
+        # --- C3: reference-target stubs (neo4j.go:111-114): every target
+        # gets a gid-only node unless one exists after C1/C2, i.e. unless
+        # it is live in this batch or found in the store and not deleted.
+        stubs = (
+            keys.where(F.col("target") & ~F.col("live"))
+            .join(F.broadcast(found), "gid", "left")
+            .where(F.col("dead") | F.col("_prior_labels").isNull())
+            .select(
+                "gid",
+                F.lit(None).cast("string").alias("label"),
+                F.array().cast("array<string>").alias("labels"),  # MERGE adds no label
+                F.lit(None).cast("string").alias("source"),
+                F.create_map().cast("map<string,string>").alias("props"),
+            )
+        )
+        nodes = (
+            _anti_by_gid(self.nodes, batch_gids)
+            .unionByName(node_items, allowMissingColumns=True)
+            .unionByName(stubs, allowMissingColumns=True)
         )
 
-        # --- C3: reference-target stubs (neo4j.go:111-114): every dst gets a
-        # gid-only node unless one already exists. W7 set-dedup of targets.
-        # Join order matters at scale: anti-joining the tiny target set
-        # against the store directly plans as a store-wide shuffle
-        # (SortMergeJoin — the small side can't be the build side of an
-        # anti join). Inverting it keeps the store scan shuffle-free:
-        # semi-join the store against the broadcast targets (one scan,
-        # small output), then a broadcast anti-join of tiny vs tiny.
-        targets = edge_items.select(F.col("dst").alias("gid")).dropDuplicates()
-        existing = nodes.select("gid").join(F.broadcast(targets), "gid", "left_semi")
-        stubs = targets.join(F.broadcast(existing), "gid", "left_anti").select(
-            "gid",
-            F.lit(None).cast("string").alias("label"),
-            F.array().cast("array<string>").alias("labels"),  # MERGE adds no label
-            F.lit(None).cast("string").alias("source"),
-            F.create_map().cast("map<string,string>").alias("props"),
+        # --- C4: edge merge (neo4j.go:116-123). Edges leaving a dead or
+        # live gid and edges entering a dead gid are gone; both endpoints
+        # of every new edge exist by construction (src is live, dst has
+        # a stub), so the MATCH endpoint check is a no-op and a plain
+        # union is the merge.
+        edges = (
+            self.edges.join(
+                F.broadcast(batch_gids.withColumnRenamed("gid", "src")), "src", "left_anti"
+            )
+            .join(
+                F.broadcast(keys.where("dead").select(F.col("gid").alias("dst"))),
+                "dst",
+                "left_anti",
+            )
+            .unionByName(prepared.edges.withColumn("source", F.lit(source)))
         )
-        nodes = nodes.unionByName(stubs, allowMissingColumns=True)
-
-        # --- C4: edge merge (neo4j.go:116-123). Both endpoints exist by
-        # construction (src is a live entity, dst has a stub), so the MATCH
-        # endpoint check is a no-op; outgoing edges of live gids were just
-        # cleared, so a plain union is the merge.
-        edges = edges.unionByName(edge_items)
-
         return GraphStore(nodes, edges)
 
     def delete_all(self, label: str, source: str) -> "GraphStore":
@@ -223,6 +235,136 @@ class GraphStore:
 
     def counts(self) -> tuple[int, int]:
         return self.nodes.count(), self.edges.count()
+
+
+# Above this many deduped batch rows, keeping the batch and its keys on
+# the driver stops being metadata-scale: the prepared frames are
+# checkpointed instead, and ``merge_commit`` takes the full-commit path.
+MERGE_MAX_BATCH_ROWS = 100_000
+
+_NODE_ITEMS = "gid string, props map<string,string>"
+_EDGE_ITEMS = "src string, rel_type string, dst string"
+_KEYS = "gid string, dead boolean, live boolean, target boolean"
+
+
+@dataclass(frozen=True)
+class PreparedBatch:
+    """One sync batch, evaluated once (:func:`prepare_batch`).
+
+    - ``nodes`` (gid, props): the live node items, property keys flattened;
+    - ``edges`` (src, rel_type, dst): the edge items, MERGE-deduped;
+    - ``keys`` (gid, dead, live, target): one row per gid the batch
+      touches — the single key frame every store-side join reads.
+
+    ``dead``/``live``/``targets`` are the same keys as sorted driver
+    lists when the batch was small enough to collect (the frames are
+    then driver-local), else ``None`` (the frames then read a checkpoint
+    of the deduped batch, and the key frame is checkpointed itself).
+    """
+
+    nodes: DataFrame
+    edges: DataFrame
+    keys: DataFrame
+    dead: list[str] | None = None
+    live: list[str] | None = None
+    targets: list[str] | None = None
+
+    @property
+    def local(self) -> bool:
+        return self.dead is not None
+
+
+def prepare_batch(batch: DataFrame) -> PreparedBatch:
+    """Evaluate a sync batch once: W3-W7 of the reference
+    (``neo4j.go:186-228``) in one Spark action.
+
+    The batch is deduped (:func:`_dedup_keep_last`), its property keys
+    flattened (W4) and each live entity's references fanned out to
+    distinct (rel_type, dst) pairs (W5/W6). After the dedup each gid is
+    one row, so a row-local ``array_distinct`` is the MERGE dedup on
+    (src, rel_type, dst) and needs no second shuffle.
+
+    At most ``MERGE_MAX_BATCH_ROWS`` deduped rows are collected and the
+    frames rebuilt on the driver, so every later join reads a one-slice
+    local relation instead of re-running the dedup. A larger batch
+    derives the same frames from a ``localCheckpoint`` of the deduped
+    rows (computing the dedup a second time, once, for the checkpoint).
+    """
+    deduped = _dedup_keep_last(batch).select(
+        "id",
+        "deleted",
+        strip_prop_keys("props").alias("props"),
+        F.array_distinct(
+            F.flatten(
+                F.transform(
+                    F.map_entries("refs"),
+                    lambda ref: F.transform(
+                        F.coalesce(ref["value"], F.array().cast("array<string>")),
+                        lambda dst: F.struct(
+                            uri_localname(ref["key"]).alias("rel_type"), dst.alias("dst")
+                        ),
+                    ),
+                )
+            )
+        ).alias("edges"),
+    )
+    rows = deduped.limit(MERGE_MAX_BATCH_ROWS + 1).collect()
+    if len(rows) > MERGE_MAX_BATCH_ROWS:
+        return _prepared_checkpointed(deduped.localCheckpoint())
+
+    spark = batch.sparkSession
+    live_rows = [r for r in rows if not r["deleted"]]
+    edge_rows = [(r["id"], e["rel_type"], e["dst"]) for r in live_rows for e in r["edges"] or ()]
+    dead = {r["id"] for r in rows if r["deleted"]}
+    live = {r["id"] for r in live_rows}
+    targets = {dst for _src, _rel, dst in edge_rows}
+    key_rows = [
+        (g, g in dead, g in live, g in targets) for g in sorted(dead | live | targets)
+    ]
+    return PreparedBatch(
+        local_df(spark, [(r["id"], r["props"]) for r in live_rows], _NODE_ITEMS, n_slices=1),
+        local_df(spark, edge_rows, _EDGE_ITEMS, n_slices=1),
+        local_df(spark, key_rows, _KEYS, n_slices=1),
+        sorted(dead),
+        sorted(live),
+        sorted(targets),
+    )
+
+
+def _prepared_checkpointed(deduped: DataFrame) -> PreparedBatch:
+    live = deduped.where(~F.col("deleted"))
+    edges = live.select(F.col("id").alias("src"), F.explode("edges").alias("e")).select(
+        "src", "e.rel_type", "e.dst"
+    )
+    keys = (
+        deduped.select(
+            F.col("id").alias("gid"),
+            F.col("deleted").alias("dead"),
+            (~F.col("deleted")).alias("live"),
+            F.lit(False).alias("target"),
+        )
+        .unionByName(
+            edges.select(
+                F.col("dst").alias("gid"),
+                F.lit(False).alias("dead"),
+                F.lit(False).alias("live"),
+                F.lit(True).alias("target"),
+            )
+        )
+        .groupBy("gid")
+        .agg(*(F.max(c).alias(c) for c in ("dead", "live", "target")))
+    )
+    return PreparedBatch(
+        live.select(F.col("id").alias("gid"), "props"), edges, keys.localCheckpoint()
+    )
+
+
+def _materialize(df: DataFrame, local: bool) -> DataFrame:
+    """A batch-sized frame computed once: rebuilt on the driver as one
+    slice when the batch is driver-local, else checkpointed."""
+    if local:
+        return local_df(df.sparkSession, df.collect(), df.schema, n_slices=1)
+    return df.localCheckpoint()
 
 
 def _dedup_keep_last(batch: DataFrame) -> DataFrame:

@@ -14,7 +14,8 @@ import os
 from opencypher_datalayer_spark.model import ENTITY_SCHEMA, normalize_entity
 import pytest
 
-from opencypher_datalayer_spark.storage import ParquetGraphStorage, open_storage
+from opencypher_datalayer_spark import store as store_mod
+from opencypher_datalayer_spark.storage import open_storage
 from opencypher_datalayer_spark.store import GraphStore
 
 NS = "urn:m"
@@ -25,6 +26,21 @@ def backend(request):
     """Both storage backends run the same pruned-MERGE suite: the
     single-host lock backend and the multi-host transaction-log one."""
     return request.param
+
+
+@pytest.fixture(params=["local", "checkpoint"])
+def materialization(request):
+    """Which ``prepare_batch`` branch a merge takes: driver-local frames
+    (the pruned merge) or checkpointed frames (forced by a row bound of
+    0; ``merge_commit`` then takes the full-commit path)."""
+    return request.param
+
+
+def _merge(spark, storage, batch, materialization, monkeypatch, label="P", source="s"):
+    with monkeypatch.context() as m:
+        if materialization == "checkpoint":
+            m.setattr(store_mod, "MERGE_MAX_BATCH_ROWS", 0)
+        return storage.merge_commit(spark, batch, label, source)
 
 
 def _batch(spark, entities):
@@ -61,13 +77,24 @@ def _files(storage, v):
     }
 
 
-def _snapshot(spark, storage, v):
-    s = storage.load_version(spark, v)
+def _rows(store):
+    """A store as comparable sets: nodes with their label set (so a
+    wrong multi-label union cannot pass) and edges. A gid stored twice
+    would collapse into the set unnoticed, so it fails here instead."""
+    nodes = [
+        (r["gid"], r["label"], tuple(r["labels"]), r["source"],
+         tuple(sorted(r["props"].items())))
+        for r in store.nodes.collect()
+    ]
+    assert len({n[0] for n in nodes}) == len(nodes), "duplicate gid in store"
     return (
-        {(r["gid"], r["label"], r["source"], tuple(sorted(r["props"].items())))
-         for r in s.nodes.collect()},
-        {(r["src"], r["rel_type"], r["dst"], r["source"]) for r in s.edges.collect()},
+        set(nodes),
+        {(r["src"], r["rel_type"], r["dst"], r["source"]) for r in store.edges.collect()},
     )
+
+
+def _snapshot(spark, storage, v):
+    return _rows(storage.load_version(spark, v))
 
 
 def test_small_batch_rewrites_strict_subset(spark, tmp_path, backend):
@@ -130,22 +157,138 @@ def test_merge_chain_matches_full_path(spark, tmp_path, backend):
         shadow = shadow.apply_batch(bdf, "P", "s").checkpointed()
         storage.merge_commit(spark, bdf, "P", "s")
     got = _snapshot(spark, storage, storage.current_version())
-    want = (
-        {(r["gid"], r["label"], r["source"], tuple(sorted(r["props"].items())))
-         for r in shadow.nodes.collect()},
-        {(r["src"], r["rel_type"], r["dst"], r["source"]) for r in shadow.edges.collect()},
-    )
-    assert got == want
+    assert got == _rows(shadow)
 
 
-def _snapshot_of(spark, storage, batch):
+def _snapshot_of(spark, storage, batch, label="P", source="s"):
     """What the FULL path would produce from the current snapshot."""
-    full = storage.load(spark).apply_batch(batch, "P", "s")
-    return (
-        {(r["gid"], r["label"], r["source"], tuple(sorted(r["props"].items())))
-         for r in full.nodes.collect()},
-        {(r["src"], r["rel_type"], r["dst"], r["source"]) for r in full.edges.collect()},
-    )
+    return _rows(storage.load(spark).apply_batch(batch, label, source))
+
+
+def _node(nodes, gid):
+    (row,) = [n for n in nodes if n[0] == gid]
+    return row
+
+
+STUB = (None, (), None, ())
+
+
+def _check_tombstoned_target(nodes, edges):
+    # C1 removed n0003 and every edge touching it; C3 recreated it as a
+    # stub because the live n0001 references it
+    assert _node(nodes, f"{NS}/n0003")[1:] == STUB
+    assert (f"{NS}/n0001", "next", f"{NS}/n0003", "s") in edges
+    assert not any(f"{NS}/n0003" in (s, d) and s != f"{NS}/n0001" for s, _, d, _ in edges)
+
+
+def _check_existing_stub(nodes, edges):
+    assert _node(nodes, f"{NS}/ghost")[1:] == STUB  # once, still a stub
+    assert (f"{NS}/n0005", "next", f"{NS}/ghost", "s") in edges
+
+
+def _check_live_target(nodes, edges):
+    assert _node(nodes, f"{NS}/b")[1:] == ("P", ("P",), "s", (("name", "bee"),))
+    assert {(s, d) for s, _, d, _ in edges if s == f"{NS}/a"} == {
+        (f"{NS}/a", f"{NS}/b"), (f"{NS}/a", f"{NS}/a")
+    }
+
+
+def _check_tombstone_and_live(nodes, edges):
+    for gid, prev in ((f"{NS}/n0004", f"{NS}/n0003"), (f"{NS}/n0006", f"{NS}/n0005")):
+        assert _node(nodes, gid)[4] == (("name", "again"),)
+        assert (prev, "next", gid, "s") in edges  # no detach: live wins
+        assert not any(s == gid for s, *_ in edges)  # outgoing cleared
+
+
+def _check_second_label(nodes, edges):
+    assert _node(nodes, f"{NS}/n0002")[1:4] == ("Q", ("P", "Q"), "q")
+    assert _node(nodes, f"{NS}/fresh")[1:4] == ("Q", ("Q",), "q")
+    assert _node(nodes, f"{NS}/n0007")[1:4] == ("P", ("P",), "s")
+
+
+# name -> (setup batches, the batch under test, its label and source, check)
+MERGE_CASES = {
+    "tombstoned_target_gets_stub": (
+        [],
+        [{"id": f"{NS}/n0001", "refs": {f"{NS}/next": [f"{NS}/n0003"]}},
+         {"id": f"{NS}/n0003", "deleted": True}],
+        ("P", "s"),
+        _check_tombstoned_target,
+    ),
+    "existing_stub_not_duplicated": (
+        [[{"id": f"{NS}/extra", "refs": {f"{NS}/next": [f"{NS}/ghost"]}}]],
+        [{"id": f"{NS}/n0005", "refs": {f"{NS}/next": [f"{NS}/ghost"]}}],
+        ("P", "s"),
+        _check_existing_stub,
+    ),
+    "live_id_is_target_in_own_batch": (
+        [],
+        [{"id": f"{NS}/a", "refs": {f"{NS}/next": [f"{NS}/b", f"{NS}/a"]}},
+         {"id": f"{NS}/b", "props": {f"{NS}/name": "bee"}}],
+        ("P", "s"),
+        _check_live_target,
+    ),
+    "tombstone_and_live_same_id": (
+        [],
+        [{"id": f"{NS}/n0004", "deleted": True},
+         {"id": f"{NS}/n0004", "props": {f"{NS}/name": "again"}},
+         {"id": f"{NS}/n0006", "props": {f"{NS}/name": "again"}},
+         {"id": f"{NS}/n0006", "deleted": True}],
+        ("P", "s"),
+        _check_tombstone_and_live,
+    ),
+    "second_dataset_adds_label": (
+        [],
+        [{"id": f"{NS}/n0002", "props": {f"{NS}/name": "two"}},
+         {"id": f"{NS}/fresh", "refs": {f"{NS}/next": [f"{NS}/n0007"]}}],
+        ("Q", "q"),
+        _check_second_label,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(MERGE_CASES))
+def test_merge_case_matches_full_path(spark, tmp_path, backend, materialization, monkeypatch, case):
+    """Each write-semantics corner case, merged on both backends and
+    through both ``prepare_batch`` materializations, equals the full
+    path run with driver-local frames on the whole snapshot, and
+    satisfies the case's own expectation."""
+    setup, ents, (label, source), check = MERGE_CASES[case]
+    storage = _seed(spark, str(tmp_path / "s"), n=12, buckets=3, backend=backend)
+    for b in setup:
+        storage.merge_commit(spark, _batch(spark, b), "P", "s")
+    batch = _batch(spark, ents)
+    expected = _snapshot_of(spark, storage, batch, label, source)
+
+    v = _merge(spark, storage, batch, materialization, monkeypatch, label, source)
+    got = _snapshot(spark, storage, v)
+    assert got == expected
+    check(*got)
+
+
+def test_merge_commit_job_count(spark, tmp_path):
+    """A 200-entity merge on a manifest store evaluates the batch once:
+    one action prepares it, one lookup serves the label union and the
+    stub check, and each table write broadcasts only the materialized
+    key frame and lookup. Counted in Spark jobs, which (unlike wall
+    clock) are deterministic for a given plan."""
+    storage = _seed(spark, str(tmp_path / "j"), n=400, buckets=4)
+    ents = [
+        {"id": f"{NS}/n{(7 * i) % 500:04d}",
+         "props": {f"{NS}/name": f"u{i}"},
+         "refs": {f"{NS}/next": [f"{NS}/n{(3 * i) % 450:04d}", f"{NS}/ext{i % 9}"]}}
+        for i in range(190)
+    ] + [{"id": f"{NS}/n{i:04d}", "deleted": True} for i in range(300, 310)]
+    batch = _batch(spark, ents)
+    sc = spark.sparkContext
+    group = "test-merge-commit-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        storage.merge_commit(spark, batch, "P", "s")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 12, len(jobs)
 
 
 def test_compact_shrinks_files_preserves_data(spark, tmp_path, backend):

@@ -28,21 +28,6 @@ def backend(request):
     return request.param
 
 
-@pytest.fixture(params=["local", "checkpoint"])
-def materialization(request):
-    """Which ``prepare_batch`` branch a merge takes: driver-local frames
-    (the pruned merge) or checkpointed frames (forced by a row bound of
-    0; ``merge_commit`` then takes the full-commit path)."""
-    return request.param
-
-
-def _merge(spark, storage, batch, materialization, monkeypatch, label="P", source="s"):
-    with monkeypatch.context() as m:
-        if materialization == "checkpoint":
-            m.setattr(store_mod, "MERGE_MAX_BATCH_ROWS", 0)
-        return storage.merge_commit(spark, batch, label, source)
-
-
 def _batch(spark, entities):
     rows = []
     for i, e in enumerate(entities):
@@ -248,11 +233,14 @@ MERGE_CASES = {
 
 
 @pytest.mark.parametrize("case", sorted(MERGE_CASES))
+@pytest.mark.parametrize("materialization", ["local", "checkpoint"])
 def test_merge_case_matches_full_path(spark, tmp_path, backend, materialization, monkeypatch, case):
     """Each write-semantics corner case, merged on both backends and
     through both ``prepare_batch`` materializations, equals the full
     path run with driver-local frames on the whole snapshot, and
-    satisfies the case's own expectation."""
+    satisfies the case's own expectation. A row bound of 0 forces the
+    checkpointed frames (``merge_commit`` then takes the full-commit
+    path)."""
     setup, ents, (label, source), check = MERGE_CASES[case]
     storage = _seed(spark, str(tmp_path / "s"), n=12, buckets=3, backend=backend)
     for b in setup:
@@ -260,7 +248,9 @@ def test_merge_case_matches_full_path(spark, tmp_path, backend, materialization,
     batch = _batch(spark, ents)
     expected = _snapshot_of(spark, storage, batch, label, source)
 
-    v = _merge(spark, storage, batch, materialization, monkeypatch, label, source)
+    if materialization == "checkpoint":
+        monkeypatch.setattr(store_mod, "MERGE_MAX_BATCH_ROWS", 0)
+    v = storage.merge_commit(spark, batch, label, source)
     got = _snapshot(spark, storage, v)
     assert got == expected
     check(*got)
